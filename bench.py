@@ -43,7 +43,6 @@ HEADLINE = [
     "geocode_cascade",
     "records_pipeline_e2e",
     "extract_kernels",
-    "media_features",
 ]
 
 # median-of-N timed passes per query: the host has documented ±45% noise
@@ -105,7 +104,7 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "headline query wall time, median of "
-                f"{PASSES} passes (scan/join/window/dedup/ann/crawl/media)",
+                f"{PASSES} passes (scan/join/window/dedup/ann/crawl/image)",
                 "value": total,
                 "unit": "sec",
                 "queries": timings,

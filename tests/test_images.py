@@ -690,3 +690,24 @@ def test_decode_png_rejects_out_of_scope_streams():
         decode_png(bytes(bad))
     with pytest.raises(ValueError):
         decode_png(b"JUNK" + good[4:])
+
+
+def test_resize_images(spark):
+    imgs = IM.synthesize_images(spark, 12, neardup_every=0)
+    out = IM.resize_images(imgs, 16, 16)
+    rows = out.collect()
+    ok = [r for r in rows if r["decode_ok"]]
+    assert len(ok) == 12
+    for r in ok:
+        assert (r["w"], r["h"]) == (16, 16) and r["fmt"] == "png"
+        px = IM.decode_png(bytes(r["bytes"]))
+        assert px.shape == (16, 16, 3)
+    # captions survive the transform
+    caps = {r["image_id"]: r["caption"] for r in rows}
+    src = {r["image_id"]: r["caption"] for r in imgs.collect()}
+    assert caps == src
+
+
+def test_resize_nearest_identity():
+    px = IM.synth_pixels("img_x", 24, 24)
+    assert np.array_equal(IM.resize_nearest(px, 24, 24), px)

@@ -123,3 +123,57 @@ def test_spark_submit_ingest_warc_job(tmp_path):
     assert snap["summary"]["n_pairs"] == m["pairs"]
     assert len(snap["partition_lineage"]) == 3
     assert sum(snap["partition_lineage"].values()) == m["pairs"]
+
+
+def _response(uri: str, ctype: str, payload: bytes) -> bytes:
+    msg = f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode() + payload
+    return (
+        f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: {uri}\r\n"
+        f"WARC-Date: 2024-01-15T00:00:00Z\r\nContent-Length: {len(msg)}\r\n\r\n"
+    ).encode() + msg + b"\r\n\r\n"
+
+
+def test_ingest_warc_elects_one_caption_per_image(spark, tmp_path):
+    """Two pages reference the same images with different alt text: the
+    ingest job keeps one pair per image and elects its caption by
+    elect_captions' rule (longest wins, ties go to the lexicographically
+    smallest) — the same caption for two archive layouts, record orders
+    and shuffle partitionings."""
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))
+    import ingest_warc_job
+
+    from web_crawler_spark.images import encode_png, synth_pixels
+    from web_crawler_spark.lake import SnapshotTable
+    from web_crawler_spark.sources.warc import write_warc_gz
+
+    site = "https://h.example.com"
+    p1 = _response(f"{site}/p1", "text/html", (
+        '<img src="/images/img_1.png" alt="short">'
+        '<img src="/images/img_2.png" alt="bbb">').encode())
+    p2 = _response(f"{site}/p2", "text/html", (
+        '<img src="/images/img_1.png" alt="a longer caption">'
+        '<img src="/images/img_2.png" alt="aaa">').encode())
+    i1, i2 = (
+        _response(f"{site}/images/{i}.png", "image/png",
+                  encode_png(synth_pixels(i, 16, 16)))
+        for i in ("img_1", "img_2")
+    )
+    layouts = {"one_shard": ([p1, p2, i1, i2],), "two_shards": ([i2, p2], [i1, p1])}
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n_parts, (name, shards) in zip((1, 7), layouts.items()):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            arc = tmp_path / name
+            arc.mkdir()
+            for i, recs in enumerate(shards):
+                write_warc_gz(list(recs), str(arc / f"s{i}.warc.gz"))
+            out = str(tmp_path / f"pairs_{name}")
+            ingest_warc_job.ingest(spark, str(arc), out)
+            got.append(sorted(
+                (r["image_id"], r["caption"])
+                for r in SnapshotTable(out).read(spark).collect()
+            ))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert got[0] == got[1] == [("img_1", "a longer caption"), ("img_2", "aaa")]

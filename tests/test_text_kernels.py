@@ -66,9 +66,21 @@ def test_minhash_signature_matches_python(spark):
 
 
 def test_word_overlap_similarity(spark):
-    df = spark.createDataFrame([("a b c", "b c d")], "x string, y string")
-    got = df.select(TX.word_overlap_similarity("x", "y").alias("s")).collect()[0]["s"]
-    assert abs(got - 2 / 4) < 1e-9
+    # X10 word overlap is the k=1 arm of the blocked Jaccard join:
+    # |common words| / |union| within one block, never across blocks
+    from pyspark.sql import functions as F
+
+    from web_crawler_spark.operators import dedup as D
+
+    df = spark.createDataFrame(
+        [(1, "p", "a b c"), (2, "p", "b c d"), (3, "q", "a b c")],
+        "doc_id long, source string, text string",
+    )
+    got = D.ngram_jaccard_pairs(
+        df, "doc_id", "text", block_col=F.col("source"), k=1, threshold=0.0
+    ).collect()
+    assert [(r["a"], r["b"]) for r in got] == [(1, 2)]
+    assert abs(got[0]["jaccard"] - 2 / 4) < 1e-9
 
 
 def test_lang_id(spark):

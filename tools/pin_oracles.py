@@ -21,8 +21,8 @@ Provenance, per query (recorded in the generated module docstring):
   quality envelope + image/caption payload election are restated in pure
   Python here. A shared-kernel bug in the fuzzy merge or the pipeline
   glue now diverges the pin.
-- ``crawl_progress``, ``image_phash_dedup``, ``image_features``,
-  ``audio_features`` — golden pins of the engine's own deterministic
+- ``crawl_progress``, ``image_phash_dedup``, ``image_features`` —
+  golden pins of the engine's own deterministic
   output at sf0.01 (the driver's correctness scale). These catch
   plumbing/order/regression drift, not independent-semantics bugs;
   kernel-level independence is covered by the pytest oracles
@@ -220,15 +220,7 @@ def main() -> None:
         oracles[name] = values_oracle(df.columns, rows)
         print(f"{name}: {len(rows)} rows (golden pin)")
 
-    # audio_features retired as a standalone registry query (consolidated
-    # into media_features); its golden pin stays the source literal the
-    # merged oracle wraps, so keep regenerating it from the helper.
-    df = Q._audio_features_rows(spark, SF_DIR)
-    rows = [tuple(r) for r in df.collect()]
-    oracles["audio_features"] = values_oracle(df.columns, rows)
-    print(f"audio_features: {len(rows)} rows (golden pin, media_features source)")
-
-    # image_features was likewise consolidated into a tagged union whose
+    # image_features was consolidated into a tagged union whose
     # curation arm is closed-form SQL; only the decode-stats arm needs a
     # pin, regenerated from its helper under a non-query key so the
     # composite oracle in queries.py stays authoritative.

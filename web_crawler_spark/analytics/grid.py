@@ -5,8 +5,8 @@ Re-expresses the reference UI's data grid pipeline
 case-insensitive contains-filters (:44-52, F11), quality-range filter
 (AdvancedFilter.jsx:37-44, F12), single-key sort with nulls last (:55-69,
 W7), pagination (:72-77, W8), CSV export of the filtered+sorted view
-(:168-190, S9) — as one declarative DataFrame chain that Catalyst folds
-into a single scan with pushed filters.
+(:168-190, S9) — as composable DataFrame steps whose chain Catalyst
+folds into a single scan with pushed filters.
 
 Pagination note for scale: ``paginate`` uses a global sort + offset/limit,
 which is the correct semantics for a UI page; for deep paging over 10^10
@@ -16,7 +16,7 @@ key instead of skipping rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -86,22 +86,3 @@ def export_csv(df: DataFrame, path: str, columns: list[str] | None = None) -> No
         .csv(path)
     )
 
-
-def grid_query(
-    df: DataFrame,
-    filters: dict[str, str] | None = None,
-    quality_range: str | None = None,
-    sort_key: str | None = None,
-    ascending: bool = True,
-    page: int = 1,
-    size: int = 20,
-    quality_col: str = "qualityScore",
-) -> DataFrame:
-    """The full UI pipeline in one declarative chain."""
-    if filters:
-        df = contains_filter(df, filters)
-    if quality_range:
-        df = range_filter(df, quality_col, quality_range)
-    if sort_key:
-        df = sort_view(df, sort_key, ascending)
-    return paginate(df, page, size)

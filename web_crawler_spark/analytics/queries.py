@@ -65,6 +65,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _tagged_union(schema: list[tuple[str, str]], arms: list[DataFrame]) -> DataFrame:
+    """A composite query's tagged union. ``schema`` is the composite's
+    declared ``(name, type)`` list; each arm selects only the columns it
+    produces, under their declared names. Present columns are cast to the
+    declared type, absent ones come back as typed NULLs from
+    ``unionByName(allowMissingColumns=True)``, and the result carries the
+    declared column order."""
+    types = dict(schema)
+    out = None
+    for arm in arms:
+        arm = arm.select(*[F.col(c).cast(types[c]).alias(c) for c in arm.columns])
+        out = arm if out is None else out.unionByName(arm, allowMissingColumns=True)
+    return out.select(*types)
+
+
 def _spread(pages: DataFrame) -> DataFrame:
     """Round-robin the synthesized fixture pages across the cluster.
 
@@ -404,28 +419,23 @@ def q_grid_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         page=3, size=20,
     ).select(
         F.lit("paginate").alias("variant"), "c_custkey", "c_name",
-        F.lit(None).cast("string").alias("c_mktsegment"),
         F.round("c_acctbal", 2).alias("acctbal"),
     )
     rg = grid.range_filter(cust, "c_acctbal", "1000-5000").select(
         F.lit("range").alias("variant"), "c_custkey", "c_name",
-        F.lit(None).cast("string").alias("c_mktsegment"),
         F.round("c_acctbal", 2).alias("acctbal"),
     )
 
     def _ac(tag: str, needle: str) -> DataFrame:
         return grid.autocomplete(cust, "c_mktsegment", needle, limit=10).select(
             F.lit(tag).alias("variant"),
-            F.lit(None).cast("long").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_name"),
             F.col("suggestion").alias("c_mktsegment"),
-            F.lit(None).cast("double").alias("acctbal"),
         )
 
-    return (
-        fs.unionByName(pg).unionByName(rg)
-        .unionByName(_ac("autocomplete_a", "a"))
-        .unionByName(_ac("autocomplete_ld", "LD"))
+    return _tagged_union(
+        [("variant", "string"), ("c_custkey", "long"), ("c_name", "string"),
+         ("c_mktsegment", "string"), ("acctbal", "double")],
+        [fs, pg, rg, _ac("autocomplete_a", "a"), _ac("autocomplete_ld", "LD")],
     )
 
 
@@ -3073,29 +3083,62 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_jaccard_pairs",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, source, {_TOKS_SQL.format(col='text')} AS toks FROM documents
-    ),
-    shs AS (
-      SELECT doc_id, source,
-             list_distinct({_SHINGLES_SQL.format(toks='toks')}) AS ss
-      FROM t
+    SELECT 'shingle' AS kernel, * FROM (
+      WITH t AS (
+        SELECT doc_id, source, {_TOKS_SQL.format(col='text')} AS toks
+        FROM documents
+      ),
+      shs AS (
+        SELECT doc_id, source,
+               list_distinct({_SHINGLES_SQL.format(toks='toks')}) AS ss
+        FROM t
+      )
+      SELECT a.doc_id AS a, b.doc_id AS b,
+             round(len(list_intersect(a.ss, b.ss))::DOUBLE
+                   / len(list_distinct(list_concat(a.ss, b.ss))), 6) AS jaccard
+      FROM shs a JOIN shs b ON a.source = b.source AND a.doc_id < b.doc_id
+      WHERE len(list_intersect(a.ss, b.ss))::DOUBLE
+            / len(list_distinct(list_concat(a.ss, b.ss))) >= 0.5
     )
-    SELECT a.doc_id AS a, b.doc_id AS b,
-           round(len(list_intersect(a.ss, b.ss))::DOUBLE
-                 / len(list_distinct(list_concat(a.ss, b.ss))), 6) AS jaccard
-    FROM shs a JOIN shs b ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.ss, b.ss))::DOUBLE
-          / len(list_distinct(list_concat(a.ss, b.ss))) >= 0.5
+    UNION ALL
+    SELECT 'word' AS kernel, * FROM (
+      WITH t AS (
+        SELECT doc_id, source,
+               list_distinct({_TOKS_SQL.format(col='text')}) AS toks
+        FROM documents
+      )
+      SELECT a.doc_id AS a, b.doc_id AS b,
+             round(len(list_intersect(a.toks, b.toks))::DOUBLE
+                   / len(list_distinct(list_concat(a.toks, b.toks))), 6)
+               AS jaccard
+      FROM t a JOIN t b ON a.source = b.source AND a.doc_id < b.doc_id
+      WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
+            / len(list_distinct(list_concat(a.toks, b.toks))) > 0.7
+    )
     """,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked n-gram Jaccard self-join (block = source column)."""
+    """Blocked n-gram Jaccard self-join (block = source column), two arms
+    of the one thresholded set-similarity join: ``shingle`` — 3-token
+    shingles, Jaccard >= 0.5; ``word`` — X10 word overlap, |common| /
+    |union| of the distinct normalized words > 0.7
+    (scraper.service.js:155-190), i.e. the same join at k=1 with the
+    reference's strict threshold. The reference compares candidates
+    within one page, so blocking by source matches its scope."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(
-        d, "doc_id", "text", block_col=F.col("source"), k=3, threshold=0.5
+
+    def arm(kernel: str, k: int, threshold: float) -> DataFrame:
+        pairs = D.ngram_jaccard_pairs(
+            d, "doc_id", "text", block_col=F.col("source"), k=k,
+            threshold=threshold,
+        )
+        return pairs.select(F.lit(kernel).alias("kernel"), "a", "b", "jaccard")
+
+    # the operator keeps jaccard >= threshold; X10 drops the equality case
+    word = arm("word", 1, 0.7).filter(F.col("jaccard") > 0.7)
+    return arm("shingle", 3, 0.5).unionByName(word).select(
+        "kernel", "a", "b", F.round("jaccard", 6).alias("jaccard")
     )
-    return pairs.select("a", "b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def _simhash_oracle() -> str:
@@ -3949,17 +3992,14 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (images.shard_pack, md5 writer streams + per-writer cumsum); ``psnr``
     — the north rule's per-row emission invariant (images.verify_invariant:
     decoded pixels vs re-derived ground truth, exact for lossless /
-    PSNR >= 40 dB for lossy, plus caption equality), golden-pinned."""
-    _ns = F.lit(None).cast("string")
-    _nl = F.lit(None).cast("long")
-    _nd = F.lit(None).cast("double")
-    _nb = F.lit(None).cast("boolean")
+    PSNR >= 40 dB for lossy, plus caption equality), golden-pinned;
+    ``resize`` — decode → 16x16 nearest-neighbor resize → PNG re-encode
+    (images.resize_images) over the synthesized input_hint rows, whose
+    closed-form id/shape envelope is the oracle."""
     feats = _image_feature_agg_rows(spark, sf_dir).select(
-        F.lit("features").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"),
-        F.col("n_ok").cast("long").alias("l2"), _nl.alias("l3"),
-        F.col("avg_luma").cast("double").alias("d1"),
-        _nb.alias("b1"), _ns.alias("s1"),
+        F.lit("features").alias("kernel"), "fmt",
+        F.col("n").alias("l1"), F.col("n_ok").alias("l2"),
+        F.col("avg_luma").alias("d1"),
     )
     from web_crawler_spark.images import curate_pairs
 
@@ -3990,8 +4030,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = curate_pairs(fixture).select(
         F.lit("curation").alias("kernel"),
         F.col("image_id").alias("media_id"), "fmt",
-        F.col("w").cast("long").alias("l1"),
-        F.col("h").cast("long").alias("l2"),
+        F.col("w").alias("l1"), F.col("h").alias("l2"),
         F.col("n_caption_tokens").alias("l3"),
         F.col("aspect").alias("d1"), F.col("keep").alias("b1"),
         F.col("reject_reason").alias("s1"),
@@ -4003,28 +4042,25 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("image_id").alias("media_id"), "fmt",
         F.col("bucket_w").alias("l1"), F.col("bucket_h").alias("l2"),
         F.col("batch_idx").alias("l3"), F.col("aspect_dist").alias("d1"),
-        _nb.alias("b1"), F.col("bucket_key").alias("s1"),
+        F.col("bucket_key").alias("s1"),
     )
     est_bytes = F.col("w").cast("long") * F.col("h") * 3 + F.length("caption")
     sh = shard_pack(fixture.withColumn("_eb", est_bytes), "_eb").select(
         F.lit("shard").alias("kernel"),
         F.col("image_id").alias("media_id"), "fmt",
         F.col("writer").alias("l1"), F.col("shard_idx").alias("l2"),
-        F.col("shard_offset").alias("l3"), _nd.alias("d1"),
-        _nb.alias("b1"), F.col("shard_key").alias("s1"),
+        F.col("shard_offset").alias("l3"), F.col("shard_key").alias("s1"),
     )
     pv = _image_psnr_agg_rows(spark, sf_dir).select(
-        F.lit("psnr").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"),
-        F.col("n_ok").cast("long").alias("l2"), _nl.alias("l3"),
-        F.col("min_psnr").cast("double").alias("d1"),
-        (F.col("n") == F.col("n_ok")).alias("b1"), _ns.alias("s1"),
+        F.lit("psnr").alias("kernel"), "fmt",
+        F.col("n").alias("l1"), F.col("n_ok").alias("l2"),
+        F.col("min_psnr").alias("d1"),
+        (F.col("n") == F.col("n_ok")).alias("b1"),
     )
     co = _image_color_agg_rows(spark, sf_dir).select(
-        F.lit("colorfulness").alias("kernel"), _ns.alias("media_id"), "fmt",
-        F.col("n").cast("long").alias("l1"), _nl.alias("l2"), _nl.alias("l3"),
-        F.col("avg_color").cast("double").alias("d1"),
-        (F.col("min_color") > 0).alias("b1"), _ns.alias("s1"),
+        F.lit("colorfulness").alias("kernel"), "fmt",
+        F.col("n").alias("l1"), F.col("avg_color").alias("d1"),
+        (F.col("min_color") > 0).alias("b1"),
     )
     # score_gate: model scores AS DATA (images.model_score_gate) — the
     # broadcast threshold cascade over a closed-form score fixture the
@@ -4043,8 +4079,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sg = model_score_gate(pairs_fx, scores_fx).select(
         F.lit("score_gate").alias("kernel"),
-        F.col("image_id").alias("media_id"), _ns.alias("fmt"),
-        _nl.alias("l1"), _nl.alias("l2"), _nl.alias("l3"),
+        F.col("image_id").alias("media_id"),
         F.col("aesthetic").alias("d1"), F.col("keep").alias("b1"),
         F.col("reject_reason").alias("s1"),
     )
@@ -4075,9 +4110,8 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     el = elect_captions(el_pairs, el_edges).select(
         F.lit("caption_elect").alias("kernel"),
-        F.col("image_id").alias("media_id"), _ns.alias("fmt"),
+        F.col("image_id").alias("media_id"),
         F.col("n_members").alias("l1"), F.col("n_captions").alias("l2"),
-        _nl.alias("l3"), _nd.alias("d1"),
         F.col("is_rep").alias("b1"),
         F.col("elected_caption").alias("s1"),
     )
@@ -4093,11 +4127,12 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncated rows sniff 'png' but fail dims, bad-magic rows sniff NULL.
     # A parser bug — wrong offset, wrong endianness, a length guard off by
     # one — shows up as a nonzero delta or a flipped flag, never hides.
-    from web_crawler_spark.images import header_audit, synthesize_images
+    from web_crawler_spark.images import header_audit, resize_images, synthesize_images
 
     _i = F.regexp_extract("image_id", r"img_(\d+)", 1).cast("long")
     _nodup = ~F.col("image_id").endswith("_dup")
-    hdr_fx = synthesize_images(spark, 120).withColumn(
+    imgs = synthesize_images(spark, 120)
+    hdr_fx = imgs.withColumn(
         "bytes",
         F.when(_nodup & (_i % 10 == 3),
                F.substr(F.col("bytes"), F.lit(1), F.lit(20)))
@@ -4109,17 +4144,21 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     hd = header_audit(hdr_fx).select(
         F.lit("header").alias("kernel"),
         F.col("image_id").alias("media_id"), "fmt",
-        (F.col("hdr_w") - F.col("w")).cast("long").alias("l1"),
-        (F.col("hdr_h") - F.col("h")).cast("long").alias("l2"),
-        (F.col("hdr_bit_depth") * 100 + F.col("hdr_color_type"))
-        .cast("long").alias("l3"),
-        _nd.alias("d1"), F.col("header_dims_ok").alias("b1"),
-        F.col("sniffed").alias("s1"),
+        (F.col("hdr_w") - F.col("w")).alias("l1"),
+        (F.col("hdr_h") - F.col("h")).alias("l2"),
+        (F.col("hdr_bit_depth") * 100 + F.col("hdr_color_type")).alias("l3"),
+        F.col("header_dims_ok").alias("b1"), F.col("sniffed").alias("s1"),
     )
-    return (
-        feats.unionByName(cur).unionByName(bk).unionByName(sh)
-        .unionByName(pv).unionByName(co).unionByName(sg).unionByName(el)
-        .unionByName(hd)
+    rs = resize_images(imgs, 16, 16).select(
+        F.lit("resize").alias("kernel"), F.col("image_id").alias("media_id"),
+        "fmt", F.col("w").alias("l1"), F.col("h").alias("l2"),
+        F.col("decode_ok").alias("b1"),
+    )
+    return _tagged_union(
+        [("kernel", "string"), ("media_id", "string"), ("fmt", "string"),
+         ("l1", "long"), ("l2", "long"), ("l3", "long"), ("d1", "double"),
+         ("b1", "boolean"), ("s1", "string")],
+        [feats, cur, bk, sh, pv, co, sg, el, hd, rs],
     )
 
 
@@ -4416,15 +4455,8 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pdfs = docs.mapInPandas(encode, "sourceUrl string, bytes binary")
-    nstr = F.lit(None).cast("string")
     env = P.extract_pdf_text(pdfs).select(
-        F.lit("envelope").alias("kernel"),
-        "sourceUrl", "pages", "decode_ok",
-        F.lit(None).cast("bigint").alias("ord"),
-        nstr.alias("strategy"), nstr.alias("locationName"),
-        nstr.alias("locationAddress"), nstr.alias("city"),
-        nstr.alias("state"), nstr.alias("postcode"),
-        nstr.alias("countryIso3"),
+        F.lit("envelope").alias("kernel"), "sourceUrl", "pages", "decode_ok",
     )
 
     variants = F.array(*[
@@ -4446,15 +4478,18 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fpdfs = fdocs.mapInPandas(encode, "sourceUrl string, bytes binary")
     ftexts = P.extract_pdf_text(fpdfs)
     loc = P.extract_pdf_locations(ftexts).select(
-        F.lit("pdf_locations").alias("kernel"),
-        "sourceUrl",
-        F.lit(None).cast("int").alias("pages"),
-        F.lit(None).cast("boolean").alias("decode_ok"),
-        F.col("ord").cast("bigint").alias("ord"),
+        F.lit("pdf_locations").alias("kernel"), "sourceUrl", "ord",
         "strategy", "locationName", "locationAddress",
         "city", "state", "postcode", "countryIso3",
     )
-    return env.unionByName(loc)
+    return _tagged_union(
+        [("kernel", "string"), ("sourceUrl", "string"), ("pages", "int"),
+         ("decode_ok", "boolean"), ("ord", "bigint"), ("strategy", "string"),
+         ("locationName", "string"), ("locationAddress", "string"),
+         ("city", "string"), ("state", "string"), ("postcode", "string"),
+         ("countryIso3", "string")],
+        [env, loc],
+    )
 
 
 @query(
@@ -4939,14 +4974,12 @@ def q_geocode_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey") % 3600000 / 10000.0 - 180.0,
         ).alias("longitude"),
     )
-    _ns = F.lit(None).cast("string")
     single = EN.geocode_enrich(recs).select(
         F.lit("single").alias("variant"),
         "c_custkey",
         F.round("latitude", 6).alias("latitude"),
         F.round("longitude", 6).alias("longitude"),
         F.when(F.col("geocoded"), F.lit("dim")).otherwise(F.lit("source")).alias("provider"),
-        _ns.alias("formatted"),
     )
     cascade = EN.multi_geocode_enrich(recs).select(
         F.lit("cascade").alias("variant"),
@@ -4954,7 +4987,6 @@ def q_geocode_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("latitude", 6).alias("latitude"),
         F.round("longitude", 6).alias("longitude"),
         F.col("geo_provider").alias("provider"),
-        _ns.alias("formatted"),
     )
     pts = c.select(
         "c_custkey",
@@ -4969,7 +5001,12 @@ def q_geocode_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rgeo_provider").alias("provider"),
         F.col("formatted_address").alias("formatted"),
     )
-    return single.unionByName(cascade).unionByName(reverse)
+    return _tagged_union(
+        [("variant", "string"), ("c_custkey", "long"), ("latitude", "double"),
+         ("longitude", "double"), ("provider", "string"),
+         ("formatted", "string")],
+        [single, cascade, reverse],
+    )
 
 
 def _fuzzy_greedy_input(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5132,51 +5169,6 @@ def q_contact_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "word_overlap_pairs",
-    oracle=f"""
-    WITH t AS (
-      SELECT doc_id, list_distinct({_TOKS_SQL.format(col='text')}) AS toks
-      FROM documents WHERE doc_id < 200
-    )
-    SELECT a.doc_id AS a, b.doc_id AS b,
-           round(len(list_intersect(a.toks, b.toks))::DOUBLE
-                 / len(list_distinct(list_concat(a.toks, b.toks))), 6)
-             AS overlap
-    FROM t a JOIN t b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-          / len(list_distinct(list_concat(a.toks, b.toks))) > 0.7
-    """,
-)
-def q_word_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X10: word-overlap similarity (|common|/|union| > 0.7,
-    scraper.service.js:155-190) as a bounded self-join over a document
-    slice — the reference applies it within one page's candidate list, so
-    the quadratic pair scope is inherently small."""
-    # tokenize ONCE per document before the pair join — inlining the
-    # normalize+split expression into the pair comparison would evaluate
-    # it O(pairs) times instead of O(docs)
-    t = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 200)
-        .select(
-            "doc_id",
-            F.array_distinct(F.split(TX.normalize_text("text"), " ")).alias("toks"),
-        )
-    )
-    a = t.select(F.col("doc_id").alias("a"), F.col("toks").alias("_ta"))
-    b = t.select(F.col("doc_id").alias("b"), F.col("toks").alias("_tb"))
-    pairs = a.crossJoin(b).filter(F.col("a") < F.col("b"))
-    overlap = F.size(F.array_intersect("_ta", "_tb")).cast("double") / F.size(
-        F.array_union("_ta", "_tb")
-    )
-    return (
-        pairs.withColumn("overlap", overlap)
-        .filter(F.col("overlap") > 0.7)
-        .select("a", "b", F.round("overlap", 6).alias("overlap"))
-    )
-
-
-@query(
     "connected_components",
     oracle="""
     SELECT c_custkey AS node,
@@ -5217,45 +5209,6 @@ _IMAGE_RESIZE_ORACLE = """
     SELECT printf('img_%012d_dup', i), 16, 16, 'png', true
     FROM generate_series(0, 119) t(i) WHERE i % 10 = 0
     """
-
-
-def _image_resize_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal resize: decode → nearest-neighbor 16x16 → PNG re-encode
-    over Arrow batches; the deterministic id/shape envelope is the oracle
-    (pixel correctness is unit-tested against the numpy kernel)."""
-    from web_crawler_spark import media as M
-    from web_crawler_spark.images import synthesize_images
-
-    imgs = synthesize_images(spark, 120)
-    return M.resize_images(imgs, 16, 16).select(
-        "image_id", "w", "h", "fmt", "decode_ok"
-    )
-
-
-def _audio_features_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio: per-clip duration/RMS/zero-crossing features over
-    synthesized PCM capsules (deterministic tones keyed by id)."""
-    import pandas as pd
-
-    from web_crawler_spark import media as M
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                rate = 8000
-                freq = 100 + (i % 10) * 50
-                t = np.arange(rate // 2)
-                tone = (np.sin(2 * np.pi * freq * t / rate) * 8000).astype(np.int16)
-                rows.append((f"aud_{i:06d}", M.encode_audio(tone, rate)))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    audios = spark.range(60).mapInPandas(gen, "audio_id string, bytes binary")
-    return M.audio_features(audios).select(
-        "audio_id", "duration_s", "rms", "zero_crossings", "decode_ok"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -7062,46 +7015,25 @@ _EXTRACT_KERNELS_ORACLE = (
     """
 )
 
-_EXTRACT_STR_COLS = [
-    "sourceUrl", "locationName", "street", "city", "postcode", "country",
-    "phone", "email", "state",
-]
+_EXTRACT_SCHEMA = (
+    [("kernel", "string")]
+    + [(c, "string") for c in (
+        "sourceUrl", "locationName", "street", "city", "postcode", "country",
+        "phone", "email", "state",
+    )]
+    + [(c, "double") for c in ("confidence", "latitude", "longitude")]
+)
 
 
-def _align_extract_tagged(df: DataFrame) -> DataFrame:
-    """Like _align_extract, but the per-row sourceType IS the kernel tag
-    (the structural battery carries five strategies in one DataFrame)."""
-    cols: list = [F.col("sourceType").alias("kernel")]
-    for c in _EXTRACT_STR_COLS:
-        cols.append(
-            F.col(c).cast("string").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("string").alias(c)
-        )
-    for c in ["confidence", "latitude", "longitude"]:
-        cols.append(
-            F.col(c).cast("double").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("double").alias(c)
-        )
-    return df.select(*cols)
-
-
-def _align_extract(df: DataFrame, kernel: str) -> DataFrame:
-    cols: list = [F.lit(kernel).alias("kernel")]
-    for c in _EXTRACT_STR_COLS:
-        cols.append(
-            F.col(c).cast("string").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("string").alias(c)
-        )
-    for c in ["confidence", "latitude", "longitude"]:
-        cols.append(
-            F.col(c).cast("double").alias(c)
-            if c in df.columns
-            else F.lit(None).cast("double").alias(c)
-        )
-    return df.select(*cols)
+def _extract_arm(df: DataFrame, kernel: str | None = None) -> DataFrame:
+    """One extract_kernels arm: the canonical-record columns the strategy
+    produces, tagged ``kernel`` — or, for the batteries that carry several
+    strategies in one DataFrame, by the per-row sourceType."""
+    tag = F.lit(kernel) if kernel else F.col("sourceType")
+    return df.select(
+        tag.alias("kernel"),
+        *[c for c, _ in _EXTRACT_SCHEMA[1:] if c in df.columns],
+    )
 
 
 @query("extract_kernels", oracle=_EXTRACT_KERNELS_ORACLE)
@@ -7131,34 +7063,27 @@ def q_extract_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     builders = [
-        lambda: _align_extract(_jsonld_rows(spark, sf_dir), "jsonld"),
-        lambda: _align_extract(_microdata_rows(spark, sf_dir), "microdata"),
-        lambda: _align_extract(
+        lambda: _extract_arm(_jsonld_rows(spark, sf_dir), "jsonld"),
+        lambda: _extract_arm(_microdata_rows(spark, sf_dir), "microdata"),
+        lambda: _extract_arm(
             _inline_script_rows(spark, sf_dir), "inline_script"
         ),
-        lambda: _align_extract(_xhr_rows(spark, sf_dir), "xhr"),
-        lambda: _align_extract(_h3_rows(spark, sf_dir), "h3_sequential"),
-        lambda: _align_extract(_text_line_rows(spark, sf_dir), "text_line"),
-        lambda: _align_extract_tagged(_structural_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(_dataattr_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(_heuristic_rows(spark, sf_dir)),
-        lambda: _align_extract_tagged(
-            _scraper_rows(spark, sf_dir).drop("activity", "usageShare")
-        ),
-        lambda: _align_extract_tagged(
-            _loc_dom_rows(spark, sf_dir).drop("activity", "usageShare")
-        ),
-        lambda: _align_extract_tagged(_generic_rows(spark, sf_dir)),
-        lambda: _align_extract(
+        lambda: _extract_arm(_xhr_rows(spark, sf_dir), "xhr"),
+        lambda: _extract_arm(_h3_rows(spark, sf_dir), "h3_sequential"),
+        lambda: _extract_arm(_text_line_rows(spark, sf_dir), "text_line"),
+        lambda: _extract_arm(_structural_rows(spark, sf_dir)),
+        lambda: _extract_arm(_dataattr_rows(spark, sf_dir)),
+        lambda: _extract_arm(_heuristic_rows(spark, sf_dir)),
+        lambda: _extract_arm(_scraper_rows(spark, sf_dir)),
+        lambda: _extract_arm(_loc_dom_rows(spark, sf_dir)),
+        lambda: _extract_arm(_generic_rows(spark, sf_dir)),
+        lambda: _extract_arm(
             _jsonld_rec_rows(spark, sf_dir), "jsonld_recursive"
         ),
     ]
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         parts = [f.result() for f in [pool.submit(b) for b in builders]]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _tagged_union(_EXTRACT_SCHEMA, parts)
 
 
 _LINK_DISCOVERY_ORACLE = (
@@ -8101,8 +8026,7 @@ _CDX_ORACLE = """
 """
 
 
-@query("cdx_fetch_plan", oracle=_CDX_ORACLE)
-def q_cdx_fetch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _cdx_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDX capture-index planning (sources/cdx.py) — the fourth Common
     Crawl artifact: the Spark side renders real CDXJ LINES (urlkey +
     timestamp + JSON with url/mime/status/digest/length/offset/filename),
@@ -8161,8 +8085,7 @@ _WAT_ORACLE = """
 """
 
 
-@query("wat_link_graph", oracle=_WAT_ORACLE)
-def q_wat_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _wat_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAT metadata ingestion (sources/warc.py:wat_outlinks): the third
     Common Crawl format — JSON metadata envelopes → the outlink edge
     list that bootstraps the host link graph (PageRank/HITS/OPIC priors)
@@ -8259,8 +8182,7 @@ _WARC_GZ_ORACLE = """
 """
 
 
-@query("warc_gz_ingest", oracle=_WARC_GZ_ORACLE)
-def q_warc_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _warc_gz_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw Common-Crawl archive leg end-to-end
     (sources/warc.py:read_warc_gz): 8 synthesized .warc.gz shards, each a
     gzip-MEMBER-per-record concatenation (ISO 28500 record-at-time
@@ -8333,6 +8255,40 @@ def q_warc_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "content_length", F.md5("body").alias("body_md5"), "len_ok",
     )
     return text.unionByName(binary)
+
+
+@query(
+    "archive_kernels",
+    oracle="SELECT 'cdx' AS kernel, * FROM (" + _CDX_ORACLE + ")"
+    " UNION ALL BY NAME SELECT 'wat' AS kernel, * FROM (" + _WAT_ORACLE + ")"
+    " UNION ALL BY NAME SELECT 'warc_gz' AS kernel, * FROM ("
+    + _WARC_GZ_ORACLE + ")",
+)
+def q_archive_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Common Crawl archive formats as one tagged union: ``cdx`` —
+    capture-index parse + fetch planning (_cdx_rows); ``wat`` — the WAT
+    outlink edge list (_wat_rows); ``warc_gz`` — raw .warc.gz ingest in
+    its text and binary lanes (_warc_gz_rows). Each arm keeps its own
+    closed-form oracle; the oracle unions them by column name."""
+
+    def tagged(kernel: str, arm: DataFrame) -> DataFrame:
+        return arm.select(F.lit(kernel).alias("kernel"), "*")
+
+    return _tagged_union(
+        [("kernel", "string"), ("filename", "string"), ("offset", "long"),
+         ("length", "long"), ("url", "string"), ("ts", "string"),
+         ("digest", "string"), ("shard_seq", "long"), ("n_dups", "long"),
+         ("dup_bytes_saved", "long"), ("src", "string"),
+         ("link_ord", "long"), ("link_path", "string"),
+         ("n_outlinks", "long"), ("lane", "string"), ("shard", "string"),
+         ("record_ord", "long"), ("warc_type", "string"),
+         ("target_uri", "string"), ("warc_date", "string"),
+         ("content_length", "long"), ("body_md5", "string"),
+         ("len_ok", "boolean")],
+        [tagged("cdx", _cdx_rows(spark, sf_dir)),
+         tagged("wat", _wat_rows(spark, sf_dir)),
+         tagged("warc_gz", _warc_gz_rows(spark, sf_dir))],
+    )
 
 
 def _warc_http_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8880,125 +8836,75 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     each over its dedicated fixture."""
     from web_crawler_spark.operators import frontier as FR
 
-    _ns = F.lit(None).cast("string")
-    _nb = F.lit(None).cast("boolean")
-    _nd = F.lit(None).cast("double")
-    _nl = F.lit(None).cast("long")
     lf = _link_filter_rows(spark, sf_dir).select(
         F.lit("link_filter").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"),
+        F.col("p_partkey").alias("key"),
         F.col("href").alias("url"), "canonical",
         F.col("is_bad_scheme").alias("flag_a"),
         F.col("is_same_domain").alias("flag_b"),
         F.col("is_excluded").alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     rg = _robots_gate_rows(spark, sf_dir).select(
         F.lit("robots_gate").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"), "url",
-        _ns.alias("canonical"),
+        F.col("p_partkey").alias("key"), "url",
         F.col("is_blocked").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     mu = _map_url_rows(spark, sf_dir).select(
         F.lit("map_url").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"),
-        F.col("map_url").alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("p_partkey").alias("key"),
+        F.col("map_url").alias("url"), "lat", "lon",
     )
     md = _map_detect_rows(spark, sf_dir).select(
         F.when(F.col("kind") == "iframe", F.lit("map_iframe"))
         .otherwise(F.lit("map_link")).alias("kernel"),
         F.col("k").alias("key"), F.col("src").alias("url"),
-        _ns.alias("canonical"),
         F.col("coords_found").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        "lat", "lon", _nl.alias("priority"),
-        F.col("ord").cast("long").alias("rank"),
-        "provider", "label",
+        "lat", "lon", F.col("ord").alias("rank"), "provider", "label",
     )
     da = _map_dataattr_rows(spark, sf_dir).select(
         F.lit("map_dataattr").alias("kernel"),
-        F.col("k").alias("key"), _ns.alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        "lat", "lon", _nl.alias("priority"),
-        F.col("ord").cast("long").alias("rank"),
-        _ns.alias("provider"), "label",
+        F.col("k").alias("key"),
+        "lat", "lon", F.col("ord").alias("rank"), "label",
     )
     rt = _robots_txt_rows(spark, sf_dir).select(
         F.lit("robots_txt").alias("kernel"),
         F.col("k").alias("key"), F.col("value").alias("url"),
-        _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"), _nl.alias("priority"),
-        F.col("ord").alias("rank"),
-        _ns.alias("provider"), F.col("kind").alias("label"),
+        F.col("ord").alias("rank"), F.col("kind").alias("label"),
     )
     ld = _link_discovery_rows(spark, sf_dir).select(
         F.lit("discover").alias("kernel"),
-        F.regexp_extract("sourceUrl", r"home-(\d+)$", 1)
-        .cast("long").alias("key"),
-        "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
+        F.regexp_extract("sourceUrl", r"home-(\d+)$", 1).alias("key"),
+        "url", "priority", "rank",
     )
     dr = _doc_route_rows(spark, sf_dir).select(
         F.lit("doc_route").alias("kernel"),
-        F.col("p_partkey").cast("long").alias("key"), "url",
-        _ns.alias("canonical"),
+        F.col("p_partkey").alias("key"), "url",
         F.col("is_pdf").alias("flag_a"),
         F.col("is_doc").alias("flag_b"),
         F.col("is_home").alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     pr = _pagerank_rows(spark, sf_dir).select(
         F.lit("pagerank").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("k").alias("key"), "url", "priority", "rank",
     )
     at = _anchor_text_rows(spark, sf_dir).select(
         F.lit("anchor_text").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", _nl.alias("rank"),
-        _ns.alias("provider"), "label",
+        F.col("k").alias("key"), "url", "priority", "label",
     )
     tr = _trap_rows(spark, sf_dir).select(
         F.lit("trap").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        F.col("is_trap").alias("flag_a"), _nb.alias("flag_b"),
-        _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
+        F.col("k").alias("key"), "url",
+        F.col("is_trap").alias("flag_a"),
         F.col("n_urls").alias("priority"),
         F.col("n_templates").alias("rank"),
-        F.col("top_template_urls").cast("string").alias("provider"),
+        F.col("top_template_urls").alias("provider"),
         F.col("top_template").alias("label"),
     )
     ht = _hits_rows(spark, sf_dir).select(
         F.lit("hits").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
+        F.col("k").alias("key"), "url",
         F.col("auth_int").alias("priority"),
         F.col("hub_int").alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     wr = _warc_rows(spark, sf_dir).select(
         F.lit("warc").alias("kernel"),
@@ -9007,22 +8913,20 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("body").alias("canonical"),
         F.col("len_ok").alias("flag_a"),
         (F.col("warc_type") == "conversion").alias("flag_b"),
-        _nb.alias("flag_c"), _nd.alias("lat"), _nd.alias("lon"),
         F.col("content_length").alias("priority"),
-        F.col("record_ord").cast("long").alias("rank"),
+        F.col("record_ord").alias("rank"),
         F.col("warc_type").alias("provider"),
         F.col("warc_date").alias("label"),
     )
     wh = _warc_http_rows(spark, sf_dir).select(
         F.lit("warc_http").alias("kernel"),
-        F.col("k").cast("long").alias("key"),
+        F.col("k").alias("key"),
         F.col("target_uri").alias("url"),
         F.col("payload_md5").alias("canonical"),
         F.col("len_ok").alias("flag_a"),
         (F.col("http_status") == 200).alias("flag_b"),
-        _nb.alias("flag_c"), _nd.alias("lat"), _nd.alias("lon"),
         F.col("http_status").alias("priority"),
-        F.col("record_ord").cast("long").alias("rank"),
+        F.col("record_ord").alias("rank"),
         F.col("http_content_type").alias("provider"),
         F.col("warc_type").alias("label"),
     )
@@ -9030,45 +8934,31 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("redirect").alias("kernel"),
         F.col("k").alias("key"), "url",
         F.col("final_url").alias("canonical"),
-        F.col("is_loop").alias("flag_a"), _nb.alias("flag_b"),
-        _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("n_hops").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("is_loop").alias("flag_a"),
+        F.col("n_hops").alias("priority"),
     )
     rc = _recrawl_rows(spark, sf_dir).select(
         F.lit("recrawl").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        F.col("due").alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
+        F.col("k").alias("key"), "url",
+        F.col("due").alias("flag_a"),
         "priority", F.col("n_changes").alias("rank"),
-        F.col("n_visits").cast("string").alias("provider"),
-        F.col("next_due").cast("string").alias("label"),
+        F.col("n_visits").alias("provider"),
+        F.col("next_due").alias("label"),
     )
     tk = _trustrank_rows(spark, sf_dir).select(
         F.lit("trustrank").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("k").alias("key"), "url", "priority", "rank",
     )
     oc = _opic_rows(spark, sf_dir).select(
         F.lit("opic").alias("kernel"),
-        F.col("k").alias("key"), "url", _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        "priority", "rank",
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("k").alias("key"), "url", "priority", "rank",
     )
     ib = _ip_budget_rows(spark, sf_dir).select(
         F.lit("ip_budget").alias("kernel"),
         F.col("k").alias("key"), "url",
         F.col("polite_key").alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("ip_rank").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), F.col("seed_host").alias("label"),
+        F.col("ip_rank").alias("priority"),
+        F.col("seed_host").alias("label"),
     )
     mirror_pairs = FR.detect_mirror_hosts(
         _mirror_rows(spark, sf_dir), "host", "fp",
@@ -9078,14 +8968,10 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         mirror_pairs.filter(F.col("is_mirror")).select(
             F.col("host_a").alias("a"), F.col("host_b").alias("b"))
     ).select(
-        F.lit("mirror_cluster").alias("kernel"), _nl.alias("key"),
+        F.lit("mirror_cluster").alias("kernel"),
         F.col("node").alias("url"),
         F.col("component").alias("canonical"),
         (F.col("node") == F.col("component")).alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     mr = mirror_pairs.select(
         F.lit("mirror").alias("kernel"),
@@ -9093,32 +8979,22 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("host_a").alias("url"),
         F.col("host_b").alias("canonical"),
         F.col("is_mirror").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        F.col("jaccard_micro").alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
+        F.col("jaccard_micro").alias("priority"),
     )
     dust_pages = _dust_rows(spark, sf_dir)
     dust_rules = FR.mine_param_rules(dust_pages, "url", "fp", min_support=3)
     dur = dust_rules.select(
-        F.lit("dust_rule").alias("kernel"), _nl.alias("key"),
+        F.lit("dust_rule").alias("kernel"),
         F.col("host").alias("url"), F.col("param").alias("canonical"),
         F.col("is_rule").alias("flag_a"),
-        _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
         F.col("support").alias("priority"),
         F.col("counterexamples").alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     dua = FR.apply_param_rules(
         dust_pages.select("url").distinct(), dust_rules
     ).select(
-        F.lit("dust_apply").alias("kernel"), _nl.alias("key"),
+        F.lit("dust_apply").alias("kernel"),
         "url", F.col("canonical_url").alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
-        _nl.alias("priority"), _nl.alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
     # frontier z-order layout key (lake.zorder_value — the clustering key
     # zorder compaction range-partitions by): Morton interleave of two
@@ -9134,20 +9010,16 @@ def q_crawl_url_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     zv = LK.zorder_value([F.col("_zx"), F.col("_zy")], bits=8)
     zo = zsrc.select(
         F.lit("zorder").alias("kernel"), "key",
-        _ns.alias("url"), _ns.alias("canonical"),
-        _nb.alias("flag_a"), _nb.alias("flag_b"), _nb.alias("flag_c"),
-        _nd.alias("lat"), _nd.alias("lon"),
         zv.alias("priority"), F.shiftright(zv, 12).alias("rank"),
-        _ns.alias("provider"), _ns.alias("label"),
     )
-    return (
-        lf.unionByName(rg).unionByName(mu).unionByName(md).unionByName(da)
-        .unionByName(rt).unionByName(ld).unionByName(dr)
-        .unionByName(pr).unionByName(at).unionByName(rc).unionByName(tr)
-        .unionByName(ht).unionByName(rd).unionByName(wr).unionByName(wh)
-        .unionByName(tk).unionByName(oc).unionByName(ib)
-        .unionByName(mr).unionByName(mcl).unionByName(dur).unionByName(dua)
-        .unionByName(zo)
+    return _tagged_union(
+        [("kernel", "string"), ("key", "long"), ("url", "string"),
+         ("canonical", "string"), ("flag_a", "boolean"),
+         ("flag_b", "boolean"), ("flag_c", "boolean"), ("lat", "double"),
+         ("lon", "double"), ("priority", "long"), ("rank", "long"),
+         ("provider", "string"), ("label", "string")],
+        [lf, rg, mu, md, da, rt, ld, dr, pr, at, rc, tr, ht, rd, wr, wh,
+         tk, oc, ib, mr, mcl, dur, dua, zo],
     )
 
 
@@ -9307,183 +9179,56 @@ def q_records_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     W9/W10 (line/match caps) + the tagged per-country PIN battery as one
     tagged union over their dedicated fixtures. Generic columns: s1-s6 strings, d1/d2 doubles, b1 boolean —
     every kernel output still flows into the driver's value hash."""
-    _ns = F.lit(None).cast("string")
-    _nd = F.lit(None).cast("double")
-    _nb = F.lit(None).cast("boolean")
 
-    def pad(df, kernel, key, s=(), d=(), b=None):
-        cols = [F.lit(kernel).alias("kernel"), F.col(key).cast("long").alias("key")]
-        for i in range(6):
-            cols.append(
-                F.col(s[i]).cast("string").alias(f"s{i+1}")
-                if i < len(s) and s[i] is not None
-                else _ns.alias(f"s{i+1}")
-            )
-        for i in range(2):
-            cols.append(
-                F.col(d[i]).cast("double").alias(f"d{i+1}")
-                if i < len(d) and d[i] is not None
-                else _nd.alias(f"d{i+1}")
-            )
-        cols.append(F.col(b).alias("b1") if b else _nb.alias("b1"))
-        return df.select(*cols)
+    def arm(df, kernel, key, s=(), d=(), b=None):
+        return df.select(
+            F.lit(kernel).alias("kernel"), F.col(key).alias("key"),
+            *[F.col(c).alias(f"s{i + 1}") for i, c in enumerate(s)],
+            *[F.col(c).alias(f"d{i + 1}") for i, c in enumerate(d)],
+            *([F.col(b).alias("b1")] if b else []),
+        )
 
-    parts = [
-        pad(_levenshtein_rows(spark, sf_dir), "levenshtein", "c_custkey",
+    arms = [
+        arm(_levenshtein_rows(spark, sf_dir), "levenshtein", "c_custkey",
             s=("a", "b"), d=("sim",)),
-        pad(_height_rows(spark, sf_dir), "height", "p_partkey",
+        arm(_height_rows(spark, sf_dir), "height", "p_partkey",
             s=("activity",), d=("height",)),
-        pad(_address_normalize_rows(spark, sf_dir), "address_normalize",
+        arm(_address_normalize_rows(spark, sf_dir), "address_normalize",
             "p_partkey", s=("raw", "normalized")),
-        pad(_det_ids_rows(spark, sf_dir), "deterministic_ids", "o_orderkey",
+        arm(_det_ids_rows(spark, sf_dir), "deterministic_ids", "o_orderkey",
             s=("row_id",)),
-        pad(_page_classify_rows(spark, sf_dir), "page_classify", "p_partkey",
+        arm(_page_classify_rows(spark, sf_dir), "page_classify", "p_partkey",
             s=("url", "page_type"), d=("confidence", "priority"), b="needs_js"),
-        pad(_hours_social_rows(spark, sf_dir), "hours_web_social", "s_suppkey",
+        arm(_hours_social_rows(spark, sf_dir), "hours_web_social", "s_suppkey",
             s=("hours", "websites", "facebook", "twitter", "linkedin",
                "instagram")),
-        pad(_place_details_rows(spark, sf_dir), "place_details", "o_orderkey",
+        arm(_place_details_rows(spark, sf_dir), "place_details", "o_orderkey",
             s=("place_id", "pd_phone", "pd_website", "pd_hours", "pd_types"),
             d=("pd_rating",), b="pd_hit"),
-        pad(_line_caps_rows(spark, sf_dir), "line_caps", "s_suppkey",
+        arm(_line_caps_rows(spark, sf_dir), "line_caps", "s_suppkey",
             d=("lines_scanned", "distinct_matches")),
-        pad(_pins_rows(spark, sf_dir), "pins", "key",
+        arm(_pins_rows(spark, sf_dir), "pins", "key",
             s=("code", "country")),
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-# ---- media: image resize + audio features + video frame sampling ---------
-from web_crawler_spark.analytics.golden import GOLDEN_ORACLES as _GOLDEN  # noqa: E402
-
-_VIDEO_FRAMES_ORACLE = """
-    WITH v AS (
-      SELECT i, 2 + i % 5 AS nf, 8 + (i % 3) * 4 AS fh, 6 + (i % 2) * 4 AS fw
-      FROM generate_series(0, 39) t(i)
+    return _tagged_union(
+        [("kernel", "string"), ("key", "long")]
+        + [(f"s{i}", "string") for i in range(1, 7)]
+        + [("d1", "double"), ("d2", "double"), ("b1", "boolean")],
+        arms,
     )
-    SELECT printf('vid_%06d', i) AS media_id,
-           unnest(list_filter(generate_series(0, nf - 1), x -> x % 2 = 0))
-             AS frame_idx,
-           fw AS w, fh AS h, true AS decode_ok
-    FROM v WHERE i % 9 <> 0
-    UNION ALL
-    SELECT printf('vid_%06d', i), NULL, NULL, NULL, false
-    FROM v WHERE i % 9 = 0
-    """
-
-_MEDIA_FEATURES_ORACLE = (
-    """
-    SELECT 'image_resize' AS kernel, image_id AS media_id,
-           CAST(NULL AS BIGINT) AS frame_idx, w::BIGINT AS w, h::BIGINT AS h,
-           fmt, CAST(NULL AS DOUBLE) AS duration_s, CAST(NULL AS DOUBLE) AS rms,
-           CAST(NULL AS BIGINT) AS zero_crossings, decode_ok
-    FROM ("""
-    + _IMAGE_RESIZE_ORACLE
-    + """)
-    UNION ALL
-    SELECT 'audio', audio_id, NULL, NULL, NULL, NULL,
-           duration_s::DOUBLE, rms::DOUBLE, zero_crossings::BIGINT, decode_ok
-    FROM ("""
-    + _GOLDEN["audio_features"]
-    + """)
-    UNION ALL
-    SELECT 'video', media_id, frame_idx::BIGINT, w::BIGINT, h::BIGINT,
-           CASE WHEN decode_ok THEN 'png' END,
-           NULL, NULL, NULL, decode_ok
-    FROM ("""
-    + _VIDEO_FRAMES_ORACLE
-    + """)
-    """
-)
-
-
-def _video_frames_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal video: deterministic MINIVID capsules — 2+i%5 frames of
-    (8+(i%3)*4) x (6+(i%2)*4) px, every 9th id poisoned with a non-video
-    payload — through the frame-sampling UDTF (media.sample_frames,
-    every_n=2). Frame dims/counts are closed-form, so the oracle derives
-    the expected (id, frame_idx, w, h, decode_ok) envelope in SQL; pixel
-    round-trip correctness is unit-tested in tests/test_media.py."""
-    import pandas as pd
-
-    from web_crawler_spark import media as M
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                if i % 9 == 0:
-                    rows.append((f"vid_{i:06d}", b"NOTAVIDEO"))
-                else:
-                    nf = 2 + i % 5
-                    fh = 8 + (i % 3) * 4
-                    fw = 6 + (i % 2) * 4
-                    frames = [
-                        np.full((fh, fw, 3), (i * 13 + j * 7) % 256, np.uint8)
-                        for j in range(nf)
-                    ]
-                    rows.append((f"vid_{i:06d}", M.encode_video(frames)))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes"])
-
-    videos = spark.range(40).mapInPandas(gen, "video_id string, bytes binary")
-    return M.sample_frames(videos, every_n=2)
-
-
-@query("media_features", oracle=_MEDIA_FEATURES_ORACLE)
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multimodal payload battery as one tagged union: image decode →
-    16x16 nearest-neighbor resize → PNG re-encode envelope, per-clip audio
-    features (duration/RMS/zero-crossings over PCM capsules; golden-pinned
-    oracle — tools/pin_oracles.py), and video frame sampling (every 2nd
-    frame of MINIVID capsules, poison rows yield decode_ok=false). All
-    three run Arrow-batched mapInPandas over binary payload columns — the
-    production plumbing shape for opaque media at scale."""
-    _nd = F.lit(None).cast("double")
-    _nl = F.lit(None).cast("long")
-    _ns = F.lit(None).cast("string")
-    img = _image_resize_rows(spark, sf_dir).select(
-        F.lit("image_resize").alias("kernel"),
-        F.col("image_id").alias("media_id"), _nl.alias("frame_idx"),
-        F.col("w").cast("long").alias("w"), F.col("h").cast("long").alias("h"),
-        "fmt", _nd.alias("duration_s"), _nd.alias("rms"),
-        _nl.alias("zero_crossings"), "decode_ok",
-    )
-    aud = _audio_features_rows(spark, sf_dir).select(
-        F.lit("audio").alias("kernel"),
-        F.col("audio_id").alias("media_id"), _nl.alias("frame_idx"),
-        _nl.alias("w"), _nl.alias("h"), _ns.alias("fmt"),
-        F.col("duration_s").cast("double").alias("duration_s"),
-        F.col("rms").cast("double").alias("rms"),
-        F.col("zero_crossings").cast("long").alias("zero_crossings"),
-        "decode_ok",
-    )
-    vid = _video_frames_rows(spark, sf_dir).select(
-        F.lit("video").alias("kernel"),
-        F.col("video_id").alias("media_id"),
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.col("w").cast("long").alias("w"), F.col("h").cast("long").alias("h"),
-        F.when(F.col("decode_ok"), F.lit("png")).alias("fmt"),
-        _nd.alias("duration_s"), _nd.alias("rms"),
-        _nl.alias("zero_crossings"), "decode_ok",
-    )
-    return img.unionByName(aud).unionByName(vid)
 
 
 # --------------------------------------------------------------------------
 # Pinned VALUES-literal oracles for the non-SQL-expressible queries
-# (greedy/iterative/media ops). crawl_bfs_frontier's literal comes from the
+# (greedy/iterative/image ops). crawl_bfs_frontier's literal comes from the
 # independent single-threaded Python oracle (web_crawler_spark/oracle.py);
 # the rest are golden pins of deterministic output at sf0.01 — provenance
 # documented in analytics/golden.py / tools/pin_oracles.py. Only keys with
 # a live registry entry are installed (retired standalone queries keep
 # their pins in golden.py as source literals for the consolidated oracles).
 # --------------------------------------------------------------------------
+from web_crawler_spark.analytics.golden import GOLDEN_ORACLES as _GOLDEN  # noqa: E402
+
 _ORACLES.update({k: v for k, v in _GOLDEN.items() if k in _QUERIES})
 
 # image_features composite: golden-pinned features arm (key
@@ -9617,6 +9362,14 @@ _ORACLES["image_features"] = (
         FROM range(120) t(i) WHERE i % 10 = 0
       )
     )
+    UNION ALL
+    SELECT 'resize' AS kernel, image_id AS media_id, fmt, w::BIGINT AS l1,
+           h::BIGINT AS l2, CAST(NULL AS BIGINT) AS l3,
+           CAST(NULL AS DOUBLE) AS d1, decode_ok AS b1,
+           CAST(NULL AS VARCHAR) AS s1
+    FROM ("""
+    + _IMAGE_RESIZE_ORACLE
+    + """)
     """
 )
 

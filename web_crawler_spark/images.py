@@ -378,6 +378,53 @@ def image_features(images: DataFrame) -> DataFrame:
     return images.mapInPandas(gen, IMAGE_FEATURES_SCHEMA)
 
 
+def resize_nearest(pixels: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Nearest-neighbor resample (pure numpy, vectorized)."""
+    sh, sw = pixels.shape[:2]
+    ys = (np.arange(h) * sh // h).clip(0, sh - 1)
+    xs = (np.arange(w) * sw // w).clip(0, sw - 1)
+    return pixels[ys][:, xs]
+
+
+RESIZED_SCHEMA = T.StructType(
+    [
+        T.StructField("image_id", T.StringType(), False),
+        T.StructField("bytes", T.BinaryType(), True),
+        T.StructField("w", T.IntegerType(), True),
+        T.StructField("h", T.IntegerType(), True),
+        T.StructField("fmt", T.StringType(), True),
+        T.StructField("caption", T.StringType(), True),
+        T.StructField("decode_ok", T.BooleanType(), False),
+    ]
+)
+
+
+def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Decode → nearest-neighbor resize → re-encode PNG, Arrow-batched.
+    Input: the input_hint images schema. Poison rows yield
+    decode_ok=False instead of failing the stage."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for _, r in pdf.iterrows():
+                try:
+                    px = decode_image(bytes(r["bytes"]), r["fmt"])
+                    small = resize_nearest(px, out_w, out_h)
+                    rows.append(
+                        (r["image_id"], encode_png(small), out_w, out_h,
+                         "png", r["caption"], True)
+                    )
+                except Exception:
+                    rows.append(
+                        (r["image_id"], None, None, None, r["fmt"],
+                         r["caption"], False)
+                    )
+            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
+
+    return images.mapInPandas(gen, RESIZED_SCHEMA)
+
+
 def synthesize_images(
     spark, n: int, caption_fn=None, lossy_every: int = 4, neardup_every: int = 10
 ) -> DataFrame:

@@ -1388,6 +1388,11 @@ def semantic_dedup_pairs(
     6-dp-rounded cosine (ties → smallest id), so the output is stable
     across engines and partitionings. Pass ``codebook`` (e.g. from
     ``ivf_train_codebook``) to cluster with trained centroids.
+
+    With neither ``codebook`` nor ``n_centroids`` given, the centroid
+    count is sized from the corpus: the call runs an eager ``df.count()``
+    (a Spark job, and one extra pass over unpersisted lineage) before it
+    returns. Pass ``n_centroids`` or a codebook to keep the call lazy.
     """
     from web_crawler_spark.operators import similarity as SIM
 

@@ -404,7 +404,9 @@ def http_response(body: Column) -> Column:
 def wat_outlinks(
     df: DataFrame, body_col: str = "body", uri_col: str = "target_uri"
 ) -> DataFrame:
-    """WAT metadata records → the outlink edge list (src, link_ord, url).
+    """WAT metadata records → the outlink edge list
+    (src, link_ord, link_path, url); ``link_path`` is the WAT link's
+    ``path`` field (e.g. ``A@/href``, ``IMG@/src``).
 
     WAT is the third Common Crawl format (WARC envelope, JSON body): the
     canonical outlink path is ``Envelope → Payload-Metadata →
